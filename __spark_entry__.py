@@ -153,9 +153,10 @@ def q_pip_count(spark, sf_dir):
 
 
 def q_pip_count_salted(spark, sf_dir):
-    """Same join with LB1 skew handling LIVE: the per-cell cost table
-    salts hot cells (probe split, build replicated) and the equi-join
-    runs on (cell_id, salt). Results must be identical — the same
+    """Same join with LB1 load balancing LIVE. The supplier side is
+    broadcast, so salting is skipped and the balance is the probe's
+    spread on point_id; a shuffled cell join would instead salt hot cells from
+    the per-cell cost table. Results must be identical — the same
     oracle as pip_count checks that."""
     pts = TB.customer_points(spark, sf_dir)
     polys = TB.rects_with_geom(TB.supplier_rects(spark, sf_dir))

@@ -14,6 +14,12 @@ stealing (include/wsq.hpp), MPI starvation-board stealing
    side across salts, bounding the largest join group;
 3. AQE skew-join splits (session.py configs) catch residual runtime
    skew — the "stealing" Spark can do natively.
+
+Salting balances a SHUFFLED cell join only, where a cell's refine runs
+in that cell's partition. Under a broadcast build side each probe row
+is refined in its own task, so a salted key moves no work; there
+``spatial_join`` balances by hash-spreading the probe on its unique
+id instead, and never builds this module's cost table.
 """
 
 from __future__ import annotations

@@ -12,7 +12,7 @@ Physical plan (all declared via DataFrame API; Catalyst + AQE pick
 broadcast vs shuffled-hash vs SMJ and split skewed partitions):
 
     scan → cell tessellation (floor/sequence/explode, codegen'd)
-         → equi-join on cell_id  (+ salt when a cost table says so)
+         → equi-join on cell_id  (+ salt on a shuffled join, per cost table)
          → residual MBR predicate (Catalyst, pushed into the join)
          → pandas-UDF exact refine (the only Python, Arrow-batched)
          → dedup (reference-point rule, Catalyst) / parity multiplicity
@@ -108,23 +108,37 @@ def _local_geom_frame(layer: DataFrame, id_col: str, rows) -> DataFrame:
     return layer.sparkSession.createDataFrame(pdf, schema=schema)
 
 
-def _covering_cell_counts(rows, cell_deg: float):
-    """Per-row covering-cell counts from the declared bounds — the
-    driver-side closed form of ``tessellate_bbox``'s explode fanout
-    (identical clamped floor arithmetic as grid.cells_covering_bbox,
-    so Σ equals exploded.count() exactly, without running a job)."""
+def _cell_ranges(rows, cell_deg: float):
+    """Per-row covering-cell index ranges ``(x0, x1, y0, y1)`` from the
+    collected bounds — the driver-side closed form of
+    ``tessellate_bbox``'s clamped floor arithmetic, edge cases
+    included: Catalyst's GREATEST skips a NULL and FLOOR casts NaN to
+    0, so a NULL/NaN bound lands on index 0 (NumPy would cast the NaN
+    to an arbitrary int64), ±inf clamps, and an inverted range counts
+    like Spark's descending ``sequence``."""
     import numpy as np
 
     nx, ny = GRID.grid_dims(cell_deg)
     b = np.array(
         [[r[2], r[3], r[4], r[5]] for r in rows], dtype=np.float64
+    ).reshape(-1, 4)
+
+    def idx(v, off, n):
+        f = np.nan_to_num(np.floor((v + off) / cell_deg), nan=0.0)
+        return np.clip(f, 0, n - 1).astype(np.int64)
+
+    x0, x1 = idx(b[:, 0], 180.0, nx), idx(b[:, 2], 180.0, nx)
+    y0, y1 = idx(b[:, 1], 90.0, ny), idx(b[:, 3], 90.0, ny)
+    return (
+        np.minimum(x0, x1), np.maximum(x0, x1),
+        np.minimum(y0, y1), np.maximum(y0, y1),
     )
-    if not len(rows):
-        return np.zeros(0, dtype=np.int64)
-    x0 = np.clip(np.floor((b[:, 0] + 180.0) / cell_deg), 0, nx - 1).astype(np.int64)
-    x1 = np.clip(np.floor((b[:, 2] + 180.0) / cell_deg), 0, nx - 1).astype(np.int64)
-    y0 = np.clip(np.floor((b[:, 1] + 90.0) / cell_deg), 0, ny - 1).astype(np.int64)
-    y1 = np.clip(np.floor((b[:, 3] + 90.0) / cell_deg), 0, ny - 1).astype(np.int64)
+
+
+def _covering_cell_counts(rows, cell_deg: float):
+    """Per-row covering-cell counts, so Σ equals exploded.count()
+    exactly without running a job."""
+    x0, x1, y0, y1 = _cell_ranges(rows, cell_deg)
     return (x1 - x0 + 1) * (y1 - y0 + 1)
 
 
@@ -137,14 +151,7 @@ def _cell_count_pairs(rows, cell_deg: float):
     measured 0.6 s on the 10k-polygon bench layer; this is ~10 ms)."""
     import numpy as np
 
-    if not rows:
-        return []
-    nx, ny = GRID.grid_dims(cell_deg)
-    b = np.array([[r[2], r[3], r[4], r[5]] for r in rows], dtype=np.float64)
-    x0 = np.clip(np.floor((b[:, 0] + 180.0) / cell_deg), 0, nx - 1).astype(np.int64)
-    x1 = np.clip(np.floor((b[:, 2] + 180.0) / cell_deg), 0, nx - 1).astype(np.int64)
-    y0 = np.clip(np.floor((b[:, 1] + 90.0) / cell_deg), 0, ny - 1).astype(np.int64)
-    y1 = np.clip(np.floor((b[:, 3] + 90.0) / cell_deg), 0, ny - 1).astype(np.int64)
+    x0, x1, y0, y1 = _cell_ranges(rows, cell_deg)
     h = y1 - y0 + 1
     ncell = (x1 - x0 + 1) * h
     total = int(ncell.sum())
@@ -404,6 +411,15 @@ def point_in_polygon_join(
     at scale that second equi-join would be a full extra shuffle of
     the pair table. Payload names must not collide with the polygon
     layer's ``minx..maxy`` / ``geom_wkb`` / ``poly_id`` columns.
+
+    ``broadcast``: 'auto' broadcasts a build side known to fit, True
+    always, False never (a shuffled cell join). That one decision sets
+    the load balance: under a broadcast build ``salt=True`` is a no-op
+    and the probe spread below is the balance; under a shuffled cell
+    join ``salt=True`` salts hot cells from a cost table.
+    ``probe_partitions`` 'auto' hashes the probe of a Python refine on
+    ``point_id`` into one partition per core, only when its scan has
+    fewer partitions than cores; an int is used as given.
     """
     if point_payload and mode != "pairs":
         raise ValueError("point_payload requires mode='pairs'")
@@ -418,13 +434,6 @@ def point_in_polygon_join(
         lat="py",
         cell_deg=cell_deg,
     )
-    # Probe repartitioning is decided AFTER the refine transport is
-    # known (below): only a Python refine stage needs it — under a
-    # broadcast join its parallelism equals the probe's scan splits,
-    # so a compact input would serialize the pandas-UDF refine. A
-    # pure-Catalyst plan (refine=False / rect fast path) runs fine on
-    # the scan splits, and the repartition would be a wasted exchange.
-
     if isinstance(polygons, PreparedPolygonLayer):
         if refine and polygons.contains_udf is None:
             raise ValueError(
@@ -433,17 +442,12 @@ def point_in_polygon_join(
                 "dict transport needs one geometry per id); use "
                 "refine=False or a DataFrame layer"
             )
-        pts_raw = pts
-        if refine:
-            pts = _ensure_probe_partitions(pts, probe_partitions)
-        polys = _maybe_broadcast(polygons.exploded, None, broadcast)
         return _pip_finish(
-            pts, polys, polygons.contains_udf if refine else None,
-            refine, mode, salt, target_pairs_per_task,
-            build_small=polygons.n_rows <= BROADCAST_ROW_THRESHOLD,
+            pts, polygons.exploded, polygons.contains_udf if refine else None,
+            refine, mode, salt, target_pairs_per_task, broadcast,
             build_rows=polygons.n_rows,
+            probe_partitions=probe_partitions,
             payload=point_payload,
-            pts_cost=pts_raw,
             build_cell_counts=polygons.cell_counts,
         )
 
@@ -489,23 +493,20 @@ def point_in_polygon_join(
         # ingest Python stage) entirely
         src = _local_geom_frame(polygons, poly_id, rows)
     polys = tessellate_bbox(src.select(*poly_cols), cell_deg)
-
-    pts_raw = pts
-    if refine:
-        pts = _ensure_probe_partitions(pts, probe_partitions)
-    polys = _maybe_broadcast(polys, polygons, broadcast)
     return _pip_finish(
         pts, polys, contains_udf, refine, mode, salt, target_pairs_per_task,
-        build_small=rows is not None,
+        broadcast,
         build_rows=(
             int(_covering_cell_counts(rows, cell_deg).sum())
             if rows is not None
             else None
         ),
+        probe_partitions=probe_partitions,
         payload=point_payload,
-        pts_cost=pts_raw,
         build_cell_counts=(
-            _cell_count_pairs(rows, cell_deg) if rows is not None else None
+            _cell_count_pairs(rows, cell_deg)
+            if salt and rows is not None
+            else None
         ),
     )
 
@@ -518,87 +519,67 @@ def _pip_finish(
     mode: str,
     salt: bool,
     target_pairs_per_task: int,
-    build_small: bool = False,
-    build_rows: int | None = None,
+    broadcast: str | bool,
+    build_rows: int | None,
+    probe_partitions,
     payload: tuple[str, ...] = (),
-    pts_cost: DataFrame | None = None,
     build_cell_counts=None,
 ) -> DataFrame:
-    if salt:
-        # LB1 rebirth: cost-estimated salting of hot cells (see
-        # operators/skew.py) — bounds the largest join group the way
-        # TASKS_PER_JOB bounded the reference's work units.
+    # THE join decision: is the build side broadcast? 'auto' asserts it
+    # when the exploded build side is KNOWN to fit (collected dict /
+    # closed-form count) — a local-replay or lazily-cached build side
+    # carries no stats, and a missed broadcast is a full shuffle of
+    # the probe table (J4 fragment-and-replicate).
+    bcast = broadcast is True or (
+        broadcast == "auto"
+        and build_rows is not None
+        and build_rows <= BROADCAST_ROW_THRESHOLD
+    )
+    # The load balance follows from it. Under a broadcast join each
+    # probe row's refine runs in that row's own task, so salting the
+    # join key moves no work and salt=True is a no-op: balance is an
+    # even spread of probe rows over tasks, hashed on the unique
+    # point_id ((px, py) sends every geocoded-to-centroid point to one
+    # task). Only a Python refine needs the spread.
+    pts_scan = pts
+    if refine:
+        pts = _spread_probe(pts, probe_partitions)
+    join_keys = ["cell_id"]
+    if salt and not bcast:
+        # Shuffled cell join: the refine runs in the join's partitions,
+        # so LB1 cost-estimated salting of hot cells (operators/skew.py)
+        # bounds the largest join group the way TASKS_PER_JOB bounded
+        # the reference's work units. The hot-cell cost table is
+        # collected ONCE (one row per cell above the task target) and
+        # replayed locally; its probe side is the un-spread scan, since
+        # the cost job needs only per-cell counts.
         from workstealing_spatial_join_spark.operators.skew import (
             cell_cost_table,
             salt_build_side,
             salt_probe_side,
         )
 
-        # collect the hot-cell cost table ONCE (tiny by construction:
-        # one row per cell whose est_pairs exceed the task target) and
-        # replay it as a local frame — the salting joins and the
-        # broadcast gate below would otherwise each re-run the two
-        # groupBy aggregates behind it. The probe side of the cost
-        # aggregate is the UN-repartitioned tessellation (pts_cost):
-        # the cost job needs only per-cell counts, and running it
-        # through the refine repartition would pay that exchange a
-        # second time (the main query re-executes it anyway).
-        # build_cell_counts (driver-side closed form from the
-        # collected layer) removes the build-side aggregate too.
         cost_hot = cell_cost_table(
-            pts_cost if pts_cost is not None else pts,
+            pts_scan,
             polys,
             target_pairs=target_pairs_per_task,
             right_cell_counts=build_cell_counts,
         ).where(F.col("n_salt") > 1)
         cost_rows = cost_hot.collect()
-        if not cost_rows:
-            # the estimator found NO hot cell: the honest LB1 decision
-            # is to not pay the salting machinery at all (probe-side
-            # salt join, build-side replicate explode, a wider join
-            # key) — the same adaptive skip AQE's skew handling makes
-            # when nothing is skewed. Results are identical by
-            # construction (an all-ones salt table is a no-op); the
-            # cost estimation itself — the thing the salted parity
-            # query measures — has already run.
-            salt = False
-    if salt:
-        cost = pts.sparkSession.createDataFrame(cost_rows, cost_hot.schema)
-        pts = salt_probe_side(pts, cost, ["point_id"])
-        polys = salt_build_side(polys, cost)
-        if build_small:
-            # the salt explode wrecks AQE's size estimate for the
-            # build side (sequence-explode cardinality is unknown), so
-            # a known-small layer would fall back to a full shuffle
-            # join — re-assert the broadcast hint (measured: salted
-            # PIP 8.1s -> shuffle removed at bench scale). But gate it
-            # on the POST-salt size (ADVICE r3): replication on a
-            # heavily skewed layer can multiply the pre-salt rows the
-            # caller sized well past safe broadcast size. The extra
-            # row count is exact from the collected cost rows:
-            # Σ (n_salt−1)·build_rows over hot cells. Gate on
-            # base + extra (ADVICE r4): a layer already at the
-            # threshold plus heavy salting must not broadcast ~2×
-            # the threshold.
-            extra = sum(
-                (r["n_salt"] - 1) * r["n_right"] for r in cost_rows
-            )
-            base = build_rows if build_rows is not None else 0
-            if base + extra <= BROADCAST_ROW_THRESHOLD:
-                polys = F.broadcast(polys)
-        join_keys = ["cell_id", "salt"]
-    else:
-        join_keys = ["cell_id"]
-        if build_small and (
-            build_rows is None or build_rows <= BROADCAST_ROW_THRESHOLD
-        ):
-            # deterministic J4 fragment-and-replicate: the build side
-            # is KNOWN to fit (collected dict / closed-form exploded
-            # count) — assert the broadcast instead of hoping AQE's
-            # size estimate agrees (a local-replay or lazily-cached
-            # build side has no stats, and a missed broadcast here is
-            # a full shuffle of the probe table)
-            polys = F.broadcast(polys)
+        # no hot cell: an all-ones salt table is a no-op, so skip the
+        # salting machinery — AQE's skew handling makes the same call
+        if cost_rows:
+            cost = pts.sparkSession.createDataFrame(cost_rows, cost_hot.schema)
+            pts = salt_probe_side(pts, cost, ["point_id"])
+            polys = salt_build_side(polys, cost)
+            join_keys = ["cell_id", "salt"]
+    if bcast:
+        polys = F.broadcast(polys)
+    elif broadcast is False:
+        # without a hint Catalyst still broadcasts a small build side;
+        # a sort-merge join rules that out and, unlike a shuffled hash
+        # join, spills a large build side instead of holding it
+        polys = polys.hint("merge")
 
     from workstealing_spatial_join_spark.functions.exprs import cexpr
 
@@ -740,7 +721,7 @@ def polygon_join(
         fut_l = pool.submit(_side, left, left_id)
         fut_r = pool.submit(_side, right, right_id)
         lrows, l_rects, l_unique, l_tess, l_df = fut_l.result()
-        rrows, r_rects, r_unique, r_tess, r_df = fut_r.result()
+        rrows, r_rects, r_unique, r_tess, _ = fut_r.result()
 
     refine_bc = None
     catalyst_rect = False
@@ -826,6 +807,7 @@ def polygon_join(
         lt = F.broadcast(lt)
     elif (
         broadcast == "auto"
+        and not salt
         and r_expl is not None
         and r_expl <= BROADCAST_ROW_THRESHOLD
     ):
@@ -834,8 +816,8 @@ def polygon_join(
         # rather than relying on AQE size estimates, which a
         # local-replay frame does not carry
         rt = F.broadcast(rt)
-    else:
-        rt = _maybe_broadcast(rt, r_df, broadcast)
+    elif broadcast is True:
+        rt = F.broadcast(rt)
 
     join_cond = F.col("l.cell_id") == F.col("r.cell_id")
     if salt:
@@ -995,49 +977,22 @@ def polygon_join(
     return scored.select(*sel)
 
 
-def _repartition_probe(df: DataFrame, n: int) -> DataFrame:
-    """Spread the probe side over ``n`` partitions. HASH partitioning
-    on the unique point id, not round-robin: a keyless repartition
-    first pays a full local sort of its input
-    (spark.sql.execution.sortBeforeRepartition, needed so retried
-    tasks reproduce their row assignment — guide §2.5), while hashing
-    a deterministic unique key is retry-safe for free and spreads
-    evenly."""
-    cols = df.columns
-    if "px" in cols and "py" in cols:
-        # the coordinates are read by every downstream mode anyway;
-        # hashing the unique id would force the id column into the
-        # scan even in count mode (observed in the plan's ReadSchema)
-        return df.repartition(n, F.col("px"), F.col("py"))
-    if "point_id" in cols:
-        return df.repartition(n, F.col("point_id"))
-    return df.repartition(n)
-
-
-def _ensure_probe_partitions(df: DataFrame, probe_partitions) -> DataFrame:
+def _spread_probe(df: DataFrame, probe_partitions) -> DataFrame:
+    """Hash-repartition the probe on its unique ``point_id`` — retry-
+    safe for free, where a keyless repartition first pays a full local
+    sort (spark.sql.execution.sortBeforeRepartition, guide §2.5). An
+    explicit int is honoured as given; 'auto' spreads to one partition
+    per core only when the scan has fewer — each extra Python task adds
+    a fixed worker round trip, so finer tasks cost more than they
+    balance."""
     if probe_partitions is None:
         return df
-    if probe_partitions == "auto":
-        # 2× parallelism: fine-grained tasks let the scheduler absorb
-        # stragglers — the same granularity insight as the reference's
-        # TASKS_PER_JOB=20 chunking (include/global_var.h:26), applied
-        # at Spark task level instead of deque-job level.
-        target = 2 * df.sparkSession.sparkContext.defaultParallelism
-        try:
-            current = df.rdd.getNumPartitions()
-        except Exception:
+    if probe_partitions != "auto":
+        return df.repartition(int(probe_partitions), F.col("point_id"))
+    target = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        if df.rdd.getNumPartitions() >= target:
             return df
-        return _repartition_probe(df, target) if current < target else df
-    return _repartition_probe(df, int(probe_partitions))
-
-
-def _maybe_broadcast(
-    exploded: DataFrame, original: DataFrame, broadcast: str | bool
-) -> DataFrame:
-    """Fragment-and-replicate rebirth (J4, tests/main.cpp:189-274):
-    replicate the small layer to every task instead of shuffling both
-    sides. 'auto' asks Catalyst/AQE (autoBroadcastJoinThreshold +
-    runtime stats) — explicit True forces the hint."""
-    if broadcast is True:
-        return F.broadcast(exploded)
-    return exploded
+    except Exception:
+        return df
+    return df.repartition(target, F.col("point_id"))

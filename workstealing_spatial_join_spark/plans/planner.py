@@ -8,7 +8,8 @@ DataFrame-plan OPTIONS — Catalyst/AQE still owns the physical plan.
 
 Strategy matrix (mirrors §4's physical-execution decisions):
   polygons small (≤ broadcast_rows)        → broadcast the exploded
-      polygon side (J4 fragment-and-replicate rebirth)
+      polygon side (J4 fragment-and-replicate rebirth); load balance
+      is a hash spread of the probe on point_id, never salting
   both large, skewed cells (cost table)    → salted cell join (LB1)
   both large, uniform                      → plain cell equi-join;
       AQE skew-split as backstop

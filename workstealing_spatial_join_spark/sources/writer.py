@@ -40,11 +40,20 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def _manifest_partitions(spark: SparkSession, table_path: str) -> DataFrame | None:
+def _read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """``path`` as a DataFrame, or None when it holds no table yet. The
+    existence check goes through the Hadoop FileSystem API: letting
+    ``spark.read.parquet`` fail logs a Java FileNotFoundException stack
+    trace per missing directory of every fresh table. A directory left
+    by a crashed first commit (no data files) still reads as None."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    if not fs.exists(jpath):
+        return None
     try:
-        return spark.read.parquet(f"{table_path}/_manifest").select("pval").distinct()
+        return spark.read.parquet(path)
     except Exception:
-        return None  # first run — no manifest yet
+        return None
 
 
 def _coarsen_cell_expr(col, bits: int):
@@ -138,14 +147,13 @@ def write_resumable(
     # a table's block size is part of its layout: the bits recorded on
     # first write are authoritative (a resume or a later batch using
     # different bits would alias block ids across layouts)
-    try:
-        recorded = int(
-            spark.read.parquet(f"{table_path}/_meta")
-            .select("coarsen_bits").first()[0]
-        )
-    except Exception:
-        recorded = None
-    if recorded is None and _manifest_partitions(spark, table_path) is not None:
+    meta = _read_parquet_if_exists(spark, f"{table_path}/_meta")
+    meta = meta.first() if meta is not None else None
+    done = _read_parquet_if_exists(spark, f"{table_path}/_manifest")
+    recorded = None
+    if meta is not None:
+        recorded = int(meta["coarsen_bits"])
+    elif done is not None:
         # legacy table: manifest exists but predates _meta — its pvals
         # are RAW partition values. Auto-coarsening here would anti-join
         # block ids against raw ids (silent skips where they collide)
@@ -180,11 +188,10 @@ def write_resumable(
             ),
         )
         partition_col = block_col
-    done = _manifest_partitions(spark, table_path)
     pending = df
     n_skipped = 0
     if done is not None:
-        done = done.cache()
+        done = done.select("pval").distinct().cache()
         n_skipped = done.count()
         pending = df.join(
             F.broadcast(done),
@@ -294,12 +301,11 @@ def verify_lineage(
     fallback for tables written before ``_meta`` recorded the name."""
     data = read_table(spark, table_path)
     part = None
-    try:
-        meta = spark.read.parquet(f"{table_path}/_meta").first()
+    meta = _read_parquet_if_exists(spark, f"{table_path}/_meta")
+    meta = meta.first() if meta is not None else None
+    if meta is not None and "partition_col" in meta:
         base = meta["partition_col"]
         part = f"{base}_block" if int(meta["coarsen_bits"]) else base
-    except Exception:
-        pass
     if part is None or part not in data.columns:
         pcol = [c for c in data.columns if c.endswith("_block")] or [
             c for c in data.columns if c in ("cell_id", "pval")
